@@ -3,7 +3,9 @@ package graft
 import graft.images.ImageGen
 import graft.validation.{ImageSuite, ImageSuiteQueries}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): one JSON line on stdout AND written to
@@ -22,6 +24,17 @@ import scala.jdk.CollectionConverters._
   * measured late by 2–6×, which corrupted the round-1 recorded efficiency
   * (0.57 recorded vs 0.93–0.95 clean). Forking isolates each level the way
   * separate executors would be isolated on a real cluster.
+  *
+  * Modes (every one runs under the `Sessions.bench` profile):
+  *   - no args: the full protocol above;
+  *   - `suite <cpus> <imageDir> <warmDir>`: one forked suite leg;
+  *   - `queries <cpus> <sfDir> [name…]`: times the named queries (default:
+  *     the headline list) in this JVM, min-of-2 over two interleaved
+  *     rounds — the forked query phase, and the A/B loop for plan work;
+  *   - `explain <sfDir> <outDir> name…`: writes each query's formatted
+  *     plan to `<outDir>/<name>.txt` — the plan `queries` times;
+  *   - `skewstress [n]`: uniform vs skew-adversarial tier through
+  *     `runAndCheckpoint`.
   */
 object Bench {
 
@@ -90,23 +103,6 @@ object Bench {
 
   private val headline = suiteV4 ++ headlineNew
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", math.max(cpus, 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // row groups are 1 MB (ImageGen); small splits keep the decode stage
-      // wide at any core count
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Execute a DataFrame fully without collecting (noop sink). */
   private def exhaust(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
@@ -137,23 +133,23 @@ object Bench {
     * THIS (fresh) JVM; print the machine-readable marker line.
     */
   private def suiteChild(cpus: Int, imageDir: String, warmDir: String): Unit = {
-    val spark = session(cpus)
+    val spark = Sessions.bench(cpus)
     suiteSeconds(spark, warmDir, s"warmup-$cpus") // JIT/codegen warm, untimed
     val sec = suiteSeconds(spark, imageDir, s"bench-$cpus")
     spark.stop()
     println(f"SUITE_SEC=$sec%.3f")
   }
 
-  /** Child mode for the headline-query phase: times every query in THIS
-    * (fresh) JVM and prints one marker line per query. Forked for the
+  /** Child mode for the headline-query phase: times each of `names` in
+    * THIS (fresh) JVM and prints one marker line per query. Forked for the
     * same reason as the suite legs: by the time phase 3 starts the
     * parent JVM has hosted 30+ minutes of generation sessions and the
     * measured times were carrying its old-gen/code-cache age (the r4
     * in-parent run recorded the simhash fallback rung 1.6× above the
     * same binary on a fresh JVM).
     */
-  private def queriesChild(cpus: Int, sfDir: String): Unit = {
-    val spark = session(cpus)
+  private def queriesChild(cpus: Int, sfDir: String, names: Seq[String]): Unit = {
+    val spark = Sessions.bench(cpus)
     try exhaust(Tables(spark, sfDir, "lineitem").groupBy("l_returnflag").count())
     catch { case _: Throwable => }
     // MIN-OF-2 per query, the two passes INTERLEAVED as full rounds
@@ -161,7 +157,7 @@ object Bench {
     // twice to bias a query's minimum, and the raw pair is emitted so
     // drift is visible per query in the artifact.
     val rounds = Array.fill(2)(scala.collection.mutable.Map[String, Double]())
-    for (r <- 0 to 1; name <- headline) {
+    for (r <- 0 to 1; name <- names) {
       var failed = false
       // catalog cache AND RDD-level blocks: localCheckpoint()ed frames
       // (CC rounds, snapshot pins, decontamination's benchmark table) are
@@ -180,7 +176,7 @@ object Bench {
       }
       rounds(r)(name) = if (failed) -1.0 else t
     }
-    headline.foreach { name =>
+    names.foreach { name =>
       val (a, b) = (rounds(0)(name), rounds(1)(name))
       println(f"QTIME=$name=$a%.3f,$b%.3f")
     }
@@ -237,57 +233,58 @@ object Bench {
     marker.stripPrefix("SUITE_SEC=").toDouble
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("suite")) {
-      suiteChild(args(1).toInt, args(2), args(3))
-      return
-    }
-    if (args.headOption.contains("queries")) {
-      queriesChild(args(1).toInt, args(2))
-      return
-    }
-    // Skew stress row (VERDICT r4 #8): uniform vs skew-adversarial tier
-    // (30% duplicate ids on 2 hot keys in p0) through the FULL
-    // runAndCheckpoint engine at local[cpus]; prints one BENCH.md row.
-    if (args.headOption.contains("skewstress")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-      val n = if (args.length > 1) args(1).toLong else 100000L
-      val spark = session(cpus)
-      val uniDir = ImageGen.ensure(spark, n)
-      val skewDir = graft.validation.SkewStress.ensureSkewedTier(spark, n)
-      def wall(dataDir: String, tag: String): Double = {
-        val out = java.nio.file.Files.createTempDirectory(s"skewbench-$tag").toString
-        spark.catalog.clearCache()
-        time(graft.validation.ImageSuite.runAndCheckpoint(spark, dataDir, out, tag))
+  /** `explain` mode: each query's formatted plan under the bench profile,
+    * so a dump is the plan [[queriesChild]] times. */
+  private def explainChild(sfDir: String, outDir: String, names: Seq[String]): Unit = {
+    val spark = Sessions.bench()
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      try {
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
+        println(s"[explain] wrote $name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[explain] $name failed: ${e.getMessage}")
       }
-      wall(uniDir, "warm-u"); wall(skewDir, "warm-s") // symmetric JIT warm
-      val tU = wall(uniDir, "uni"); val tS = wall(skewDir, "skew")
-      println(f"SKEWSTRESS n=$n cpus=$cpus uniform_sec=$tU%.1f skewed_sec=$tS%.1f ratio=${tS / tU}%.2f")
-      spark.stop()
-      return
     }
-    // Dev harness: `Bench query <name> <sfDir> [reps]` times ONE headline
-    // query (warm session, cache cleared between reps) — the A/B loop for
-    // plan work without paying a full bench run.
-    if (args.headOption.contains("query")) {
-      val (name, dir) = (args(1), args(2))
-      val reps = if (args.length > 3) args(3).toInt else 3
-      val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-      try exhaust(Tables(spark, dir, "lineitem").groupBy("l_returnflag").count())
-      catch { case _: Throwable => }
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-        time(exhaust(SparkEntry.queries(name)(spark, dir)))
-      }
-      println(f"QUERY_SEC name=$name reps=${ts.map(t => f"$t%.3f").mkString(",")} min=${ts.min}%.3f")
-      spark.stop()
-      return
-    }
+    spark.stop()
+  }
 
+  /** Skew stress row (VERDICT r4 #8): uniform vs skew-adversarial tier
+    * (30% duplicate ids on 2 hot keys in p0) through the FULL
+    * runAndCheckpoint engine at local[cpus]; prints one BENCH.md row. */
+  private def skewStress(n: Long): Unit = {
+    val cpus = Sessions.cpus
+    val spark = Sessions.bench(cpus)
+    val uniDir = ImageGen.ensure(spark, n)
+    val skewDir = graft.validation.SkewStress.ensureSkewedTier(spark, n)
+    def wall(dataDir: String, tag: String): Double = {
+      val out = Files.createTempDirectory(s"skewbench-$tag").toString
+      spark.catalog.clearCache()
+      time(graft.validation.ImageSuite.runAndCheckpoint(spark, dataDir, out, tag))
+    }
+    wall(uniDir, "warm-u"); wall(skewDir, "warm-s") // symmetric JIT warm
+    val tU = wall(uniDir, "uni"); val tS = wall(skewDir, "skew")
+    println(f"SKEWSTRESS n=$n cpus=$cpus uniform_sec=$tU%.1f skewed_sec=$tS%.1f ratio=${tS / tU}%.2f")
+    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => fullProtocol()
+    case "suite" :: cpus :: imageDir :: warmDir :: _ => suiteChild(cpus.toInt, imageDir, warmDir)
+    case "queries" :: cpus :: sfDir :: names =>
+      queriesChild(cpus.toInt, sfDir, if (names.isEmpty) headline else names)
+    case "explain" :: sfDir :: outDir :: names if names.nonEmpty =>
+      explainChild(sfDir, outDir, names)
+    case "skewstress" :: n => skewStress(n.headOption.fold(100000L)(_.toLong))
+    case _ => sys.error("usage: graft.Bench [suite <cpus> <imageDir> <warmDir> | " +
+      "queries <cpus> <sfDir> [name...] | explain <sfDir> <outDir> name... | skewstress [n]]")
+  }
+
+  private def fullProtocol(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cpus
     val nImages = ImageSuiteQueries.rowsFor(sfDir)
     // Scaling pair N → 4N at local[1] vs local[4]: in this single-JVM
     // sandbox the executor pool shares cores and memory bandwidth with
@@ -298,7 +295,7 @@ object Bench {
     val loN = 1; val hiN = math.min(4, cpus)
 
     // ---- phase 0: generate inputs once (untimed), in the parent ----
-    val spark = session(cpus)
+    val spark = Sessions.bench(cpus)
     val imageDir = ImageGen.ensure(spark, nImages)
     // JIT tier: ~20k rows ≈ 2× the C2 compile threshold per hot kernel —
     // enough to warm decode/codegen paths without inflating low-core legs
@@ -412,6 +409,6 @@ object Bench {
     println(json)
     System.err.println(json)
     println("BENCHJSON=" + json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), json + "\n")
+    Files.writeString(Paths.get("BENCH.json"), json + "\n")
   }
 }

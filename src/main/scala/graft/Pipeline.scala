@@ -242,13 +242,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "target/pipeline-out"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.oracle()
     import spark.implicits._
     val (curated, stages) = curate(spark, sfDir)
     curated.write.mode(SaveMode.Overwrite).partitionBy("lang")

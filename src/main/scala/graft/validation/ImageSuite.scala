@@ -1,20 +1,19 @@
 package graft.validation
 
-import graft.images.{ImageCodec, ImageGen, Phash}
+import graft.images.ImageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 /** The north-rule constraint-validation engine over the image+caption table.
   *
   * Pipeline shape (designed for 10^12 rows / 1000 executors):
   *
   *   scan(images, pruned to pending partitions)           ── no shuffle
-  *     → decode stage (mapPartitions, bytes dropped)      ── narrow
+  *     → decode stage (image_facts expression, no bytes)  ── narrow
   *     → per-row violation array + explode                ── narrow
   *     → per-partition verdict aggregation                ── 1 shuffle (part)
-  *   uniqueness: salted two-stage agg on image_id         ── 2 shuffles
-  *   referential: broadcast-or-SMJ anti joins both ways   ── ≤1 shuffle
+  *   uniqueness + referential: full-outer join on
+  *     image_id, duplicate count as a window on its key   ── 3 shuffles
   *   drift: per-part histograms + global baseline join    ── 1 shuffle
   *
   * All byte-derived columns are computed in the scan stage; only small
@@ -33,53 +32,11 @@ object ImageSuite {
   // and would flag every partition at 10^12 scale.
   val DriftChi2Max = 0.5
 
-  /** Decode stage: one pass over rows, emits DecodedFacts, drops bytes. */
-  def decodeFacts(spark: SparkSession, images: DataFrame,
-                  decodeNanos: Option[LongAccumulator] = None): Dataset[DecodedFacts] = {
-    import spark.implicits._
-    images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "part")
-      .as[(String, Array[Byte], Int, Int, String, String, Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, bytes, w, h, fmt, caption, phash, part) =>
-          val t0 = System.nanoTime()
-          val hasBytes = bytes != null && bytes.nonEmpty
-          val nBytes = if (bytes == null) 0L else bytes.length.toLong
-          val dec = if (hasBytes) ImageCodec.decode(bytes) else None
-          val sniffed = ImageCodec.sniffFormat(bytes).getOrElse("none")
-          // ground truth is id-derived (asserted-vs-inferred): the ordinal
-          // seeds the synthesis, so reference pixels are recomputable.
-          val ord = idOrdinal(id)
-          val facts = dec match {
-            case Some((px, dw, dh)) =>
-              val truth = ImageGen.truthPixels(ord, dw, dh)
-              val p = ImageCodec.psnr(px, truth).getOrElse(Double.NaN)
-              val ph = Phash.phash64(px, dw, dh)
-              DecodedFacts(id, part, fmt, caption, w, h, phash,
-                hasBytes, nBytes, decode_ok = true, dw, dh,
-                psnr_db = p, phash_rec = ph,
-                phash_hamming = Phash.hamming(ph, phash),
-                fmt_sniffed = sniffed,
-                caption_expected = ImageGen.caption(ord))
-            case None =>
-              DecodedFacts(id, part, fmt, caption, w, h, phash,
-                hasBytes, nBytes, decode_ok = false, 0, 0,
-                psnr_db = Double.NaN, phash_rec = 0L, phash_hamming = -1,
-                fmt_sniffed = sniffed,
-                caption_expected = ImageGen.caption(ord))
-          }
-          decodeNanos.foreach(_.add(System.nanoTime() - t0))
-          facts
-        }
-      }
-  }
-
-  def idOrdinal(id: String): Long =
-    try id.stripPrefix("img-").toLong catch { case _: Throwable => -1L }
-
-  /** Expression-based decode stage — same facts as [[decodeFacts]], but as
-    * a DataFrame projection over the native `image_facts` Catalyst
-    * expression: no Product-encoder round-trip per row, prune/pushdown
-    * compose around it, and downstream predicates stay codegen'd.
+  /** Decode stage as a DataFrame projection over the native `image_facts`
+    * Catalyst expression: bytes are dropped in the scan stage, there is no
+    * Product-encoder round-trip per row, prune/pushdown compose around it,
+    * and downstream predicates stay codegen'd. `ImageFactsExprSpec` checks
+    * it row for row against a plain-Scala `mapPartitions` decoder.
     */
   def decodeFactsExpr(images: DataFrame): DataFrame = {
     val f = graft.functions.ImageFactsExpr.imageFacts(col("bytes"), col("image_id"))
@@ -184,91 +141,16 @@ object ImageSuite {
       .unionByName(verdict("null_bytes", "null_rate_bytes"))
   }
 
-  /** Global uniqueness of image_id with salted two-stage aggregation;
-    * violations carry every extra row beyond the kept (first) one.
-    * Returns (verdicts per part, violations).
-    */
-  def uniqueness(facts: DataFrame, runId: String, saltBuckets: Int = 32): (DataFrame, DataFrame) = {
-    // stage 1: (id, salt) partial counts — a hot duplicated id spreads over
-    // saltBuckets reducers; stage 2 merges per id. The salt hashes ALL
-    // input columns (not just the key): pure content hash, so task retries
-    // and repartitions reproduce identical salts (never rand()), while a
-    // key duplicated with varying payloads still fans out across buckets.
-    // Only byte-identical full-row duplicates share a bucket — the
-    // irreducible case for any deterministic content salt.
-    val salted = facts
-      .withColumn("salt", pmod(xxhash64(facts.columns.map(col): _*), lit(saltBuckets)))
-      .select(col("image_id"), col("part"), col("salt"))
-    val stage1 = salted.groupBy("image_id", "salt")
-      .agg(count(lit(1)).as("c1"), min("part").as("minp1"))
-    val perId = stage1.groupBy("image_id")
-      .agg(sum("c1").as("n"), min("minp1").as("min_part"))
-    val dups = perId.filter(col("n") > 1)
-    val violations = facts.join(broadcast(dups.select("image_id", "n")), Seq("image_id"))
-      .select(col("part"), col("image_id"), lit("uniqueness_image_id").as("check"),
-        concat(lit("key seen "), col("n"), lit(" times")).as("observed"),
-        lit("unique image_id").as("expected"))
-    val perPart = facts.groupBy("part").agg(count(lit(1)).as("n_rows"))
-      .join(violations.groupBy("part").agg(count(lit(1)).as("n_violations")), Seq("part"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), lit("uniqueness_image_id").as("check"),
-        (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-        lit(runId).as("run_id"))
-    (perPart, violations)
-  }
-
-  /** Referential checks image↔caption, both directions (left anti), plus
-    * cross-table bit-for-bit caption consistency on the inner match
-    * (input_hint caption-equality) — one join surface feeds all three.
-    */
-  def referential(facts: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) = {
-    val imgIds = facts.select(col("image_id"), col("part"), col("caption"))
-    val capIds = captions.select(col("image_id").as("cap_image_id"),
-      col("part").as("cap_part"), col("caption").as("cap_caption"))
-    val missingCaption = imgIds.join(capIds,
-        imgIds("image_id") === capIds("cap_image_id"), "left_anti")
-      .select(col("part"), col("image_id"),
-        lit("referential_caption_exists").as("check"),
-        lit("no caption row").as("observed"), lit("caption row exists").as("expected"))
-    val orphanCaption = capIds.join(imgIds,
-        capIds("cap_image_id") === imgIds("image_id"), "left_anti")
-      .select(col("cap_part").as("part"), col("cap_image_id").as("image_id"),
-        lit("referential_image_exists").as("check"),
-        lit("caption without image").as("observed"), lit("image row exists").as("expected"))
-    val mismatched = imgIds.join(capIds,
-        imgIds("image_id") === capIds("cap_image_id"), "inner")
-      .filter(col("caption").isNotNull && col("cap_caption").isNotNull &&
-        col("caption") =!= col("cap_caption"))
-      .select(col("part"), col("image_id"),
-        lit("caption_consistent").as("check"),
-        col("cap_caption").as("observed"), col("caption").as("expected"))
-    val violations = missingCaption.unionByName(orphanCaption)
-      .unionByName(mismatched)
-    val nImgs = facts.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val verdicts = Seq("referential_caption_exists", "referential_image_exists",
-      "caption_consistent").map { c =>
-      nImgs
-        .join(violations.filter(col("check") === c)
-          .groupBy("part").agg(count(lit(1)).as("n_violations")), Seq("part"), "left")
-        .na.fill(0L, Seq("n_violations"))
-        .select(col("part"), lit(c).as("check"), (col("n_violations") === 0).as("pass"),
-          (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-          lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-          lit(runId).as("run_id"))
-    }.reduce(_ unionByName _)
-    (verdicts, violations)
-  }
-
   /** Fused id-keyed checks: uniqueness + referential (both directions) +
     * caption consistency from ONE full-outer join — both sides shuffle once
-    * on image_id, the duplicate count rides the join's hash partitioning as
-    * a window (no further exchange). Semantically identical to
-    * [[uniqueness]] + [[referential]] (spec-enforced); preferred in [[run]]
-    * because the flat shuffle count drops from ~5 to 2. Hot duplicated keys
-    * are AQE-skew-join territory here; the salted two-stage variant remains
-    * for aggregate-only pipelines.
+    * on image_id, and the duplicate count rides the join's hash
+    * partitioning as a window (no further exchange). The uniqueness
+    * violations read the window before the join, which costs one more
+    * image_id shuffle of `light`: three in all (`PlanHygieneSpec` asserts
+    * the plan shape). `ImageSuiteSpec` and `KeyCheckDupSpec` pin its
+    * verdicts. Hot duplicated keys are AQE-skew-join territory here;
+    * aggregate-only pipelines get the salted two-stage form from
+    * `graft.plans.SaltedAgg`.
     */
   def keyChecks(light: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
@@ -346,8 +228,8 @@ object ImageSuite {
     val pending = if (done.isEmpty) images
       else images.filter(!col("part").isin(done.toSeq: _*)) // partition-pruned scan
 
-    // native-expression decode path (see decodeFactsExpr; ≡ decodeFacts,
-    // equivalence enforced by ImageFactsExprSpec)
+    // native-expression decode path (row-for-row equal to the plain-Scala
+    // reference decoder in ImageFactsExprSpec)
     val facts = decodeFactsExpr(pending).cache()
     // Global checks never touch `bytes` — a light projection keeps the
     // full-table pass down to pruned parquet columns (id/part/w/h/caption),

@@ -1,9 +1,7 @@
 package graft
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.test()
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY rows=$n")
     spark.stop()

@@ -1,7 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.ShuffledJoin
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape regression tests: the properties the engine's scale story
   * depends on (filter pushdown to the parquet scan, column pruning,
@@ -132,6 +140,41 @@ class PlanHygieneSpec extends SparkTestBase {
     val p = planOf(images.select("image_id", "part", "w", "h", "caption"))
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(!readSchema.contains("bytes"), s"light scan reads bytes: $readSchema")
+  }
+
+  test("keyChecks join shuffles each side once on the key; its window adds no exchange") {
+    val d = graft.images.ImageGen.ensure(spark, 2000L, "target/test-images")
+    // the suite's shape: `light` is the cached projection ImageSuite.run passes
+    val light = graft.images.ImageGen.images(spark, d)
+      .select("image_id", "part", "w", "h", "caption").cache()
+    val (_, viol) = graft.validation.ImageSuite.keyChecks(
+      light, graft.images.ImageGen.captions(spark, d), "x")
+    // operators of a physical plan, through AQE wrappers; into cached
+    // plans only when `intoCache`
+    def ops(p: SparkPlan, intoCache: Boolean): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan, intoCache)
+      case m: InMemoryTableScanExec if intoCache => ops(m.relation.cachedPlan, intoCache)
+      case other => other.children.flatMap(ops(_, intoCache))
+    })
+    def shuffleKeys(p: SparkPlan, intoCache: Boolean): Seq[Seq[String]] =
+      ops(p, intoCache).collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .map { case h: HashPartitioning =>
+          h.expressions.map { case a: AttributeReference => a.name } }
+    try {
+      val plan = viol.queryExecution.executedPlan
+      val joins = ops(plan, intoCache = true).collect {
+        case j: ShuffledJoin if j.joinType == FullOuter => j }
+      assert(joins.nonEmpty, s"keyChecks lost its full-outer join:\n$plan")
+      joins.foreach { j =>
+        assert(shuffleKeys(j.left, intoCache = true) == Seq(Seq("image_id")), s"image side:\n$j")
+        assert(shuffleKeys(j.right, intoCache = true) == Seq(Seq("cap_id")), s"caption side:\n$j")
+        assert(ops(j.left, intoCache = true).exists(_.isInstanceOf[WindowExec]),
+          s"duplicate-count window is not on the join's image side:\n$j")
+      }
+      // outside the cached join, the uniqueness violations (read before
+      // the join) pay exactly one more shuffle, on image_id
+      assert(shuffleKeys(plan, intoCache = false) == Seq(Seq("image_id")), plan)
+    } finally light.unpersist()
   }
 
   test("resume partition filter compiles to PartitionFilters") {

@@ -5,11 +5,7 @@ package graft
   */
 object SampleUsage {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.test()
     import spark.implicits._
 
     // 1. streaming: file-stream windowed counts (public API)

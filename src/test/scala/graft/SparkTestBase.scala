@@ -10,16 +10,5 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.test()
 }

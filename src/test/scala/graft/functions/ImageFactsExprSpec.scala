@@ -1,8 +1,64 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.images.ImageGen
+import graft.images.{ImageCodec, ImageGen, Phash}
 import graft.validation.ImageSuite
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** Per-row derived facts from the reference decoder. */
+case class DecodedFacts(
+  image_id: String, part: String, fmt: String, caption: String,
+  w: Int, h: Int, phash: Long,
+  has_bytes: Boolean, n_bytes: Long,
+  decode_ok: Boolean, dec_w: Int, dec_h: Int,
+  psnr_db: Double,       // vs id-derived ground truth; NaN when undecodable
+  phash_rec: Long,       // recomputed pHash; 0 when undecodable
+  phash_hamming: Int,    // vs asserted phash; -1 when undecodable
+  fmt_sniffed: String,   // magic bytes; "none" when unknown
+  caption_expected: String) // id-derived; for bit-for-bit caption equality
+
+/** Row-level reference decoder: the oracle `ImageSuite.decodeFactsExpr` is
+  * compared against — plain Scala over the codec, one `mapPartitions` pass.
+  */
+object ReferenceDecoder {
+  def decodeFacts(spark: SparkSession, images: DataFrame): Dataset[DecodedFacts] = {
+    import spark.implicits._
+    images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "part")
+      .as[(String, Array[Byte], Int, Int, String, String, Long, String)]
+      .mapPartitions { it =>
+        it.map { case (id, bytes, w, h, fmt, caption, phash, part) =>
+          val hasBytes = bytes != null && bytes.nonEmpty
+          val nBytes = if (bytes == null) 0L else bytes.length.toLong
+          val dec = if (hasBytes) ImageCodec.decode(bytes) else None
+          val sniffed = ImageCodec.sniffFormat(bytes).getOrElse("none")
+          // ground truth is id-derived (asserted-vs-inferred): the ordinal
+          // seeds the synthesis, so reference pixels are recomputable.
+          val ord = idOrdinal(id)
+          dec match {
+            case Some((px, dw, dh)) =>
+              val truth = ImageGen.truthPixels(ord, dw, dh)
+              val p = ImageCodec.psnr(px, truth).getOrElse(Double.NaN)
+              val ph = Phash.phash64(px, dw, dh)
+              DecodedFacts(id, part, fmt, caption, w, h, phash,
+                hasBytes, nBytes, decode_ok = true, dw, dh,
+                psnr_db = p, phash_rec = ph,
+                phash_hamming = Phash.hamming(ph, phash),
+                fmt_sniffed = sniffed,
+                caption_expected = ImageGen.caption(ord))
+            case None =>
+              DecodedFacts(id, part, fmt, caption, w, h, phash,
+                hasBytes, nBytes, decode_ok = false, 0, 0,
+                psnr_db = Double.NaN, phash_rec = 0L, phash_hamming = -1,
+                fmt_sniffed = sniffed,
+                caption_expected = ImageGen.caption(ord))
+          }
+        }
+      }
+  }
+
+  def idOrdinal(id: String): Long =
+    try id.stripPrefix("img-").toLong catch { case _: Throwable => -1L }
+}
 
 class ImageFactsExprSpec extends SparkTestBase {
 
@@ -12,10 +68,10 @@ class ImageFactsExprSpec extends SparkTestBase {
     val cols = Seq("image_id", "part", "fmt", "caption", "w", "h", "phash",
       "has_bytes", "n_bytes", "decode_ok", "dec_w", "dec_h",
       "phash_rec", "phash_hamming", "fmt_sniffed", "caption_expected")
-    def canon(df: org.apache.spark.sql.DataFrame) =
+    def canon(df: DataFrame) =
       df.selectExpr(cols :+ "round(psnr_db, 6) as psnr_r": _*)
         .orderBy("image_id", "part").collect().map(_.toString).toSeq
-    val a = canon(ImageSuite.decodeFacts(spark, images).toDF())
+    val a = canon(ReferenceDecoder.decodeFacts(spark, images).toDF())
     val b = canon(ImageSuite.decodeFactsExpr(images))
     assert(a.size == b.size && a.size == 2000)
     assert(a == b)
