@@ -412,7 +412,10 @@ object LayoutQueries {
     * (min/max/count/integer sum) participate.
     */
   /** Per-zone stats partials of one table part — the manifest rows the
-    * writer of that part emits. Algebraic only, so partials merge. */
+    * writer of that part emits. Algebraic only, so partials merge.
+    * Streamed through [[graft.streaming.BatchStore]], state per batch is
+    * one row per zone that batch touches: an append costs stats
+    * proportional to the new files, never a rescan. */
   def zonePartials(part: DataFrame): DataFrame =
     part.groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("zone"))
       .agg(min(col("l_shipdate")).as("z_min"),

@@ -119,7 +119,9 @@ object SnapshotQueries {
   /** Level 1: per-partition (count, xor, sum) fingerprint. One narrow
     * groupBy — partial-aggregates map-side, output is partition-count-
     * sized. This is the frame you'd persist as the snapshot's "manifest
-    * digest" next to Iceberg's own stats. */
+    * digest" next to Iceberg's own stats. Its `part` is the snapshot
+    * partition: streamed through [[graft.streaming.BatchStore]] (whose
+    * key is `part`) it is stored as `snap_part`. */
   def partitionFingerprints(snap: DataFrame): DataFrame =
     fingerprintsOf(snap, canon)
 

@@ -1,19 +1,17 @@
 package graft.streaming
 
-import graft.validation.{ImageSuiteQueries, PartitionedStore}
+import graft.validation.ImageSuiteQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous perceptual-quality gating: the streaming twin of
   * `q_i_quality_gates`. Each micro-batch collapses to one partial-counter
   * row PER image partition (gate counters + an exact DECIMAL sharpness
-  * sum + a running min — all algebraic), appended idempotently to the
-  * batch-keyed side store; gates-to-date finalize by merging partials per
-  * image partition, landing bit-identical rows to the batch query because
-  * decimal sums merge exactly and every verdict is computed once, at
-  * finalize, from the merged totals (the [[StreamingChecks]] discipline
-  * applied to the decode-derived luma facts).
+  * sum + a running min — all algebraic), stored by [[BatchStore]];
+  * gates-to-date finalize by merging partials per image partition,
+  * landing bit-identical rows to the batch query because decimal sums
+  * merge exactly and every verdict is computed once, at finalize, from
+  * the merged totals.
   *
   * Scale: state per (micro-batch, part) is one counter row; a 10^12-image
   * table gated as a stream of partition-sized micro-batches pays the same
@@ -40,20 +38,10 @@ object StreamingGates {
         sum(col("sharpness").cast("decimal(38,10)")).as("sharp_sum"),
         min(col("sharpness")).as("sharp_min"))
 
-  /** Start the partial-appending stream (store idempotent per batch id). */
-  def run(stream: DataFrame, partialsDir: String, ckptDir: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val p = partials(batch).withColumn("part", concat(lit("b"), lit(batchId)))
-        PartitionedStore.write(p, partialsDir)
-      }
-      .option("checkpointLocation", ckptDir)
-      .start()
-
   /** Gate verdicts over everything streamed so far — identical rows to
     * `q_i_quality_gates` over the union of the micro-batches. */
   def gates(spark: SparkSession, partialsDir: String): DataFrame =
-    spark.read.parquet(partialsDir).drop("part")
+    BatchStore.read(spark, partialsDir)
       .groupBy(col("img_part").as("part"))
       .agg(sum("n").as("n"), sum("n_blur").as("n_blur"),
         sum("n_dark").as("n_dark"), sum("n_bright").as("n_bright"),

@@ -1,20 +1,16 @@
 package graft.streaming
 
-import graft.validation.PartitionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous validity-interval monitoring: the streaming twin of
   * [[graft.validation.Intervals.validity]]. Each micro-batch runs the
   * same per-key sweep and collapses to ONE partial row per (batch, key)
   * — counts, maxima, and the batch's [min_from, max_to] envelope —
-  * appended idempotently to the batch-id-keyed store (the
-  * [[StreamingChecks]] overwrite-idempotence discipline). Verdicts-to-
-  * date merge partials per key with a running max of max_to over
-  * PRECEDING batches, so a timeline hole that spans a micro-batch
-  * border is still a gap violation.
+  * stored by [[BatchStore]]. Verdicts-to-date merge partials per key
+  * with a running max of max_to over PRECEDING batches, so a timeline
+  * hole that spans a micro-batch border is still a gap violation.
   *
   * Contract (same family as [[StreamingTimeliness]]): exact when, per
   * key, each batch's interval envelope starts at or after the running
@@ -62,24 +58,11 @@ object StreamingIntervals {
         max(col("to_us")).as("max_to_us"))
   }
 
-  /** Start the partial-appending stream. */
-  def run(stream: DataFrame, keySql: String, fromSql: String, toSql: String,
-          idSql: String, gapTolUs: Long, partialsDir: String,
-          ckptDir: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val p = partials(batch, keySql, fromSql, toSql, idSql, gapTolUs)
-          .withColumn("part", concat(lit("b"), lit(batchId)))
-        PartitionedStore.write(p, partialsDir)
-      }
-      .option("checkpointLocation", ckptDir)
-      .start()
-
   /** Per-partial boundary frame: carry = running max end of preceding
-    * batches for the key, ordered by (min_from_us, part). */
+    * batches for the key, ordered by (min_from_us, batch_id). */
   private def withCarry(spark: SparkSession, partialsDir: String): DataFrame = {
-    val p = spark.read.parquet(partialsDir)
-    val w = Window.partitionBy("k").orderBy("min_from_us", "part")
+    val p = BatchStore.read(spark, partialsDir)
+    val w = Window.partitionBy("k").orderBy("min_from_us", "batch_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     p.withColumn("_carry", max(col("max_to_us")).over(w))
   }
@@ -116,7 +99,7 @@ object StreamingIntervals {
   def contractViolations(spark: SparkSession, partialsDir: String): DataFrame =
     withCarry(spark, partialsDir)
       .filter(col("_carry").isNotNull && col("_carry") > col("min_from_us"))
-      .select(col("k").as("key"), col("part"),
+      .select(col("k").as("key"), col("batch_id"),
         (col("_carry") - col("min_from_us")).as("reachback_us"))
-      .orderBy("key", "part")
+      .orderBy("key", "batch_id")
 }

@@ -1,21 +1,17 @@
 package graft.streaming
 
-import graft.validation.PartitionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous timeliness monitoring: the streaming twin of
   * [[graft.validation.Timeliness.freshness]] — and the operator that
   * makes freshness USEFUL, because staleness is a property you want
   * mid-stream, not at the end of tomorrow's batch. Each micro-batch
   * collapses to one partial row per segment (n, min_us, max_us,
-  * max intra-batch gap) appended idempotently to the batch-id-keyed
-  * store (overwrite-idempotent under foreachBatch redelivery — the
-  * [[StreamingChecks]] discipline); verdicts-to-date merge the partials
-  * with lag-over-batches BOUNDARY gaps, so a silence that spans a
-  * micro-batch border is still seen.
+  * max intra-batch gap) stored by [[BatchStore]]; verdicts-to-date
+  * merge the partials with lag-over-batches BOUNDARY gaps, so a silence
+  * that spans a micro-batch border is still seen.
   *
   * Contract: gap merging is exact when each segment's batch time-ranges
   * do not overlap (in-order append ingestion — the standard watermark
@@ -45,24 +41,12 @@ object StreamingTimeliness {
         coalesce(max(col("_gap")), lit(0L)).as("max_gap_us"))
   }
 
-  /** Start the partial-appending stream. */
-  def run(stream: DataFrame, tsCol: String, segCol: String,
-          partialsDir: String, ckptDir: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val p = partials(batch, tsCol, segCol)
-          .withColumn("part", concat(lit("b"), lit(batchId)))
-        PartitionedStore.write(p, partialsDir)
-      }
-      .option("checkpointLocation", ckptDir)
-      .start()
-
   /** Freshness verdicts over everything streamed so far — identical
     * rows to [[graft.validation.Timeliness.freshness]] over the union
     * of all micro-batches (under the non-overlapping-ranges contract). */
   def verdicts(spark: SparkSession, partialsDir: String, nowTs: String,
                maxLagHours: Double, maxGapHours: Double): DataFrame = {
-    val p = spark.read.parquet(partialsDir).drop("part")
+    val p = BatchStore.read(spark, partialsDir)
     val w = Window.partitionBy("segment").orderBy("min_us")
     val boundary = col("min_us") - lag(col("max_us"), 1).over(w)
     val usPerHour = lit(3600000000.0)

@@ -94,13 +94,10 @@ object StreamingValidation {
   def keyCheckDriftStream(lightStream: DataFrame, captions: DataFrame,
                           outDir: String, ckptDir: String,
                           runId: String): org.apache.spark.sql.streaming.StreamingQuery =
-    lightStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.validation.ImageSuite.lightIncrement(
-          batch.sparkSession, batch, captions, outDir, s"$runId-b$batchId")
-      }
-      .option("checkpointLocation", ckptDir)
-      .start()
+    BatchStore.each(lightStream, ckptDir) { (batch, batchId) =>
+      graft.validation.ImageSuite.lightIncrement(
+        batch.sparkSession, batch, captions, outDir, s"$runId-b$batchId")
+    }
 
   /** Run [[windowedCounts]] from a parquet-backed file stream to an
     * in-memory sink once (availableNow), returning the sink table —

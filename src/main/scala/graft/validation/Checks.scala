@@ -316,7 +316,10 @@ final case class CheckSuite(checks: Seq[Check]) {
 
   /** One partial-counter row for a shard/micro-batch: the suite's
     * aggregate WITHOUT the metric/pass finalize. Rows from many shards
-    * merge exactly via [[finalizeFrom]]. */
+    * merge exactly via [[finalizeFrom]]. Streamed through
+    * [[graft.streaming.BatchStore]], state is one counter row per
+    * micro-batch whatever its width, so validating a 10^12-row stream
+    * costs the batch suite's single pass plus a #batches-row finalize. */
   def partials(df: DataFrame): DataFrame = {
     require(mergeablePartials,
       s"non-mergeable checks in suite: ${checks.filter(_.partialMerges.isEmpty).map(_.label)}")
@@ -658,7 +661,8 @@ object MetricAnomaly {
   /** Join two verdict frames of the SAME suite on check name and flag
     * movements. Output: (check, base_metric, metric, delta, anomalous).
     * All inputs are 6-dp verdict metrics, so the deltas are identical FP
-    * ops in any engine. */
+    * ops in any engine. With `cur` finalized from a streamed partial
+    * store, a live pipeline flags a regression mid-stream. */
   def vs(cur: DataFrame, baseline: DataFrame, maxAbsDelta: Double,
          maxRelDelta: Double): DataFrame = {
     val b = baseline.select(col("check"), col("metric").as("base_metric"))

@@ -330,10 +330,6 @@ object Drift {
       .map(_._2)
   }
 
-  /** Driver-side partial collection (resume side-store + small-table path). */
-  def collectPartials(images: DataFrame): Array[DriftPartial] =
-    partials(images).collect()
-
   /** Persisted partials as a DATASET — the resume path unions these with
     * fresh partials and finalizes via [[verdictsAuto]], so a 10^6-partition
     * table's stored sketches never funnel through the driver either.

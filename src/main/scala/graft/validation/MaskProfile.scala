@@ -42,7 +42,9 @@ object MaskProfile {
 
   /** ALGEBRAIC partial: per-full-mask counts — the mergeable state of
     * the profile (sum-merge on full_mask), shared by the batch path and
-    * the streaming twin ([[graft.streaming.StreamingMasks]]). */
+    * streamed micro-batches ([[graft.streaming.BatchStore]]). State per
+    * batch is one row per distinct full mask, and a mask that first
+    * appears mid-stream surfaces in the next finalize. */
   def fullMaskCounts(df: DataFrame, colSql: String): DataFrame =
     df.select(fullMask(expr(colSql)).as("full_mask"))
       .filter(col("full_mask").isNotNull)

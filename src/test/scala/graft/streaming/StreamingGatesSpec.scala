@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{ImageSuiteQueries, PartitionedStore}
+import graft.validation.ImageSuiteQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** The streaming quality-gate twin must land bit-identical rows to
   * q_i_quality_gates over the union of its micro-batches (decimal sums
@@ -23,10 +22,10 @@ class StreamingGatesSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_gates").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Boolean, Double, Double, Double, Double, Double)]
-    val q = StreamingGates.run(
+    val q = BatchStore.fold(
       input.toDF().toDF("part", "decode_ok", "sharpness", "brightness",
         "contrast", "clip_lo", "clip_hi"),
-      s"$tmp/partials", s"$tmp/ckpt")
+      s"$tmp/partials", s"$tmp/ckpt")(StreamingGates.partials)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
       val got = StreamingGates.gates(spark, s"$tmp/partials")
@@ -45,9 +44,8 @@ class StreamingGatesSpec extends SparkTestBase {
       ("p0", true, 200.0, 130.0, 40.0, 0.0, 0.0))
       .toDF("part", "decode_ok", "sharpness", "brightness", "contrast",
         "clip_lo", "clip_hi")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingGates.partials(batch).withColumn("part", lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit =
+      BatchStore.put(StreamingGates.partials(batch), s"$tmp/partials", 0)
     writeOnce(); writeOnce()
     val got = StreamingGates.gates(spark, s"$tmp/partials").collect()
     assert(got.length == 1 && got(0).getAs[Long]("n") == 2L,

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{Intervals, PartitionedStore}
+import graft.validation.Intervals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.lit
 
 /** The streaming interval-validity twin must produce EXACTLY the batch
   * verdicts over the union of its micro-batches — including a timeline
@@ -31,9 +30,9 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long, Long)]
-    val q = StreamingIntervals.run(
-      input.toDF().toDF("k", "f", "t", "id"), "k", "f", "t", "id", tol,
-      s"$tmp/partials", s"$tmp/ckpt")
+    val q = BatchStore.fold(input.toDF().toDF("k", "f", "t", "id"),
+      s"$tmp/partials", s"$tmp/ckpt")(
+      StreamingIntervals.partials(_, "k", "f", "t", "id", tol))
     try {
       Seq(b1, b2, b3).foreach { b => input.addData(b: _*); q.processAllAvailable() }
       val got = StreamingIntervals.verdicts(spark, s"$tmp/partials", tol)
@@ -59,10 +58,9 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv_redo").toString
     val batch = Seq(("a", 0L, 300L, 1L), ("a", 200L, 400L, 2L))
       .toDF("k", "f", "t", "id")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingIntervals.partials(batch, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit = BatchStore.put(
+      StreamingIntervals.partials(batch, "k", "f", "t", "id", tol),
+      s"$tmp/partials", 0)
     writeOnce(); writeOnce()
     val got = StreamingIntervals.verdicts(spark, s"$tmp/partials", tol)
       .collect()
@@ -76,16 +74,33 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv_ooo").toString
     val b0 = Seq(("k", 0L, 1000L, 1L)).toDF("k", "f", "t", "id")
     val b1 = Seq(("k", 500L, 600L, 2L)).toDF("k", "f", "t", "id") // reaches back
-    PartitionedStore.write(
-      StreamingIntervals.partials(b0, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b0")), s"$tmp/partials")
-    PartitionedStore.write(
-      StreamingIntervals.partials(b1, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b1")), s"$tmp/partials")
+    BatchStore.put(StreamingIntervals.partials(b0, "k", "f", "t", "id", tol),
+      s"$tmp/partials", 0)
+    BatchStore.put(StreamingIntervals.partials(b1, "k", "f", "t", "id", tol),
+      s"$tmp/partials", 1)
     val v = StreamingIntervals.contractViolations(spark, s"$tmp/partials")
       .collect()
     assert(v.length === 1)
     assert(v.head.getAs[String]("key") === "k")
     assert(v.head.getAs[Long]("reachback_us") === 500L)
+  }
+
+  test("batches with equal envelope starts are carried in numeric batch order") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("stream_iv_order").toString
+    // batch 2 is [0, 5], batch 10 arrives later as [0, 3]: the carry into
+    // batch 10 is 5, so batch 10 reaches back by 5 (a string order on
+    // "b10" < "b2" would blame batch 2 by 3 instead)
+    BatchStore.put(StreamingIntervals.partials(
+      Seq(("k", 0L, 5L, 1L)).toDF("k", "f", "t", "id"), "k", "f", "t", "id", tol),
+      s"$tmp/partials", 2)
+    BatchStore.put(StreamingIntervals.partials(
+      Seq(("k", 0L, 3L, 2L)).toDF("k", "f", "t", "id"), "k", "f", "t", "id", tol),
+      s"$tmp/partials", 10)
+    val v = StreamingIntervals.contractViolations(spark, s"$tmp/partials")
+      .collect()
+    assert(v.length === 1)
+    assert(v.head.getAs[Long]("batch_id") === 10L)
+    assert(v.head.getAs[Long]("reachback_us") === 5L)
   }
 }

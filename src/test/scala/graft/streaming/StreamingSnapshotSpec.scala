@@ -20,6 +20,14 @@ class StreamingSnapshotSpec extends SparkTestBase {
       r.getAs[Long]("fp_xor"), r.getAs[Long]("fp_sum")))
     .sortBy(_._1).toSeq
 
+  /** Batch partial: the fingerprint's own `part` is stored as `snap_part`. */
+  private def fpPartials(batch: org.apache.spark.sql.DataFrame) =
+    SnapshotQueries.partitionFingerprints(batch)
+      .withColumnRenamed("part", "snap_part")
+
+  private def fingerprintsToDate(dir: String) = SnapshotQueries.mergeFingerprints(
+    BatchStore.read(spark, dir).withColumnRenamed("snap_part", "part"))
+
   test("streamed fingerprints across three micro-batches equal a direct recompute") {
     import spark.implicits._
     val base = SnapshotQueries.baseSnapshot(spark, dir)
@@ -32,14 +40,14 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_snap").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Tup]
-    val q = StreamingSnapshot.run(
+    val q = BatchStore.fold(
       input.toDF().toDF("o_orderkey", "o_custkey", "o_orderstatus",
           "o_totalprice", "o_orderdate", "o_orderpriority")
         .withColumn("part", date_format(col("o_orderdate"), "yyyy-MM")),
-      s"$tmp/fp", s"$tmp/ckpt")
+      s"$tmp/fp", s"$tmp/ckpt")(fpPartials)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-      val got = canon(StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"))
+      val got = canon(fingerprintsToDate(s"$tmp/fp"))
       val want = canon(SnapshotQueries.partitionFingerprints(base))
       assert(got == want)
       assert(got.nonEmpty)
@@ -48,7 +56,7 @@ class StreamingSnapshotSpec extends SparkTestBase {
       // verdicts as against a fresh batch fingerprint pass
       val cur = SnapshotQueries.curSnapshot(spark, dir)
       val fromStream = SnapshotQueries.dirtyPartitions(
-          StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"),
+          fingerprintsToDate(s"$tmp/fp"),
           SnapshotQueries.partitionFingerprints(cur))
         .collect().map(r => r.getAs[String]("part") -> r.getAs[String]("status"))
         .sortBy(_._1).toSeq
@@ -67,13 +75,19 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_snap2").toString
     // simulate foreachBatch redelivery: write batch 0 TWICE via the same
     // store discipline, then finalize — counts must not double
-    val p = SnapshotQueries.partitionFingerprints(base)
-      .withColumnRenamed("part", "snap_part")
-      .withColumn("part", lit("b0"))
-    graft.validation.PartitionedStore.write(p, s"$tmp/fp")
-    graft.validation.PartitionedStore.write(p, s"$tmp/fp")
-    val got = canon(StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"))
+    BatchStore.put(fpPartials(base), s"$tmp/fp", 0)
+    BatchStore.put(fpPartials(base), s"$tmp/fp", 0)
+    val got = canon(fingerprintsToDate(s"$tmp/fp"))
     val want = canon(SnapshotQueries.partitionFingerprints(base))
     assert(got == want)
+  }
+
+  test("the store refuses a partial frame that carries its own part column") {
+    val tmp = java.nio.file.Files.createTempDirectory("stream_snap3").toString
+    val raw = SnapshotQueries.partitionFingerprints(
+      SnapshotQueries.baseSnapshot(spark, dir).limit(5))
+    val e = intercept[IllegalArgumentException](BatchStore.put(raw, s"$tmp/fp", 0))
+    assert(e.getMessage.contains("`part` column"))
+    assert(!new java.io.File(s"$tmp/fp").exists())
   }
 }

@@ -51,10 +51,9 @@ class StreamingTextSpec extends SparkTestBase {
     // at-least-once redelivery: re-summarizing batch 0 and overwriting
     // its own file (what a redelivered foreachBatch invocation does)
     // must not change the confirmed result
-    val redo = TextQueries.sketchOf(TextQueries.wordsOf(
-      spark.createDataset(b1.toSeq).toDF("doc_id", "text"))).toBytes
-    spark.createDataset(Seq(redo)).toDF("sketch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$store/batch=0")
+    val redo = StreamingText.partials(
+      spark.createDataset(b1.toSeq).toDF("doc_id", "text"))
+    BatchStore.put(redo, store, 0); BatchStore.put(redo, store, 0)
     val afterRedo = TextQueries.confirmHeavyHitters(words,
       StreamingText.mergedSketch(spark, store))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

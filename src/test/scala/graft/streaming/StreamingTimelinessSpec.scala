@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{PartitionedStore, Timeliness}
+import graft.validation.Timeliness
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The streaming freshness twin must produce EXACTLY the batch verdicts
@@ -29,9 +29,8 @@ class StreamingTimelinessSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_fresh").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, java.sql.Timestamp)]
-    val q = StreamingTimeliness.run(
-      input.toDF().toDF("seg", "ts"), "ts", "seg",
-      s"$tmp/partials", s"$tmp/ckpt")
+    val q = BatchStore.fold(input.toDF().toDF("seg", "ts"),
+      s"$tmp/partials", s"$tmp/ckpt")(StreamingTimeliness.partials(_, "ts", "seg"))
     try {
       Seq(b1, b2, b3).foreach { b => input.addData(b: _*); q.processAllAvailable() }
       val got = StreamingTimeliness.verdicts(spark, s"$tmp/partials", now,
@@ -52,10 +51,8 @@ class StreamingTimelinessSpec extends SparkTestBase {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("stream_fresh_redo").toString
     val batch = Seq(("a", ts(1, 0)), ("a", ts(2, 0))).toDF("seg", "ts")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingTimeliness.partials(batch, "ts", "seg")
-        .withColumn("part", org.apache.spark.sql.functions.lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit = BatchStore.put(
+      StreamingTimeliness.partials(batch, "ts", "seg"), s"$tmp/partials", 0)
     writeOnce(); writeOnce()
     val got = StreamingTimeliness.verdicts(spark, s"$tmp/partials", now,
       48.0, 30.0).collect()

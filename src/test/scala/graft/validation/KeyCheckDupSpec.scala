@@ -37,7 +37,8 @@ class KeyCheckDupSpec extends SparkTestBase {
       "expected one violation row per duplicate IMAGE row")
 
     val empty = Seq.empty[(String, String)].toDF("image_id", "part")
-    val (iv, _) = ImageSuite.incrementalKeyChecks(light, empty, caps, "t")
+    val (iv, _) = ImageSuite.incrementalKeyChecks(light, empty, caps, "t",
+      Seq.empty[String].toDF("part"), Seq.empty[(String, String)].toDF("part", "image_id"))
     val iuniq = iv.filter(col("check") === "uniqueness_image_id")
       .select("part", "n_violations").as[(String, Long)].collect().toMap
     assert(iuniq == uniq, s"incremental twin $iuniq != full-outer twin $uniq")

@@ -255,8 +255,8 @@ class ResumeSpec extends SparkTestBase {
     val firstImgs = ImageGen.images(spark, data3)
       .filter(col("part").isin(firstHalf: _*))
     firstImgs.select("image_id", "part").write.parquet(s"$out3/keys")
-    val partials = Drift.collectPartials(
-      firstImgs.select("image_id", "part", "w", "h", "caption"))
+    val partials = Drift.partials(
+      firstImgs.select("image_id", "part", "w", "h", "caption")).collect()
     spark.createDataset(partials.toSeq)(Encoders.product[Drift.DriftPartial])
       .write.parquet(s"$out3/drift_partials")
     spark.createDataset(firstHalf.map(p => StateRow(p, "done", 0L, 0L, "legacy", 0L)))(

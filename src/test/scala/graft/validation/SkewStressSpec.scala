@@ -48,8 +48,10 @@ class SkewStressSpec extends SparkTestBase {
       // is the hot light frame. Old keys are the caption ids (a realistic
       // resume index), non-empty so the join is a real SMJ.
       val oldKeys = caps.select(col("image_id"), col("part"))
+      import spark.implicits._
       val (verd, viol) = ImageSuite.incrementalKeyChecks(
-        light, oldKeys, caps, "skew")
+        light, oldKeys, caps, "skew", Seq.empty[String].toDF("part"),
+        Seq.empty[(String, String)].toDF("part", "image_id"))
       // execute through THIS QueryExecution (a .write would clone a fresh
       // one and the adaptive plan we inspect would never have run)
       val qe = viol.queryExecution
