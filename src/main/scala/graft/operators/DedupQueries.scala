@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Document deduplication operators over the `documents` table — the
@@ -347,14 +347,13 @@ object DedupQueries {
     * smallest doc_id reachable from it. Deterministic (pure min over the
     * component — no iteration-order sensitivity once converged), which is
     * what makes keep-one-per-component dedup oracle-able. Each iteration
-    * is one equi-join + one aggregation (shuffles on id); localCheckpoint
-    * truncates the otherwise exponentially growing plan lineage. Plain
-    * flooding needs O(graph diameter) rounds — near-dup cluster diameters
-    * are small by construction (members are mutually similar); a
-    * 10^12-row deployment with pathological chains would swap this loop
-    * body for the large-star/small-star rule (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014 — O(log n) rounds,
-    * same per-round join shape).
+    * is one equi-join + one aggregation (shuffles on id) and ONE Spark
+    * action: the round's localCheckpoint, which truncates the otherwise
+    * exponentially growing plan lineage and, through an `Observation`,
+    * counts the labels that moved. Plain flooding needs O(graph diameter)
+    * rounds — near-dup cluster diameters are small by construction
+    * (members are mutually similar); pathological chains are what
+    * [[connectedComponentsStar]] (O(log n) rounds) is for.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
                           strict: Boolean = true): DataFrame = {
@@ -369,18 +368,14 @@ object DedupQueries {
     while (changed > 0 && iter < maxIters) {
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min("comp").as("nbr_comp"))
-      // `moved` rides the same join that computes the update (a label only
-      // ever decreases, so moved ⇔ a neighbor offered a strictly smaller
-      // comp) — convergence detection costs a filter-count over the
-      // checkpointed blocks instead of the old extra join + shuffle per
-      // round against the previous labels.
-      val next = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-          (coalesce(col("nbr_comp"), col("comp")) < col("comp")).as("moved"))
+      // a label only ever decreases, so moved ⇔ a neighbor offered a
+      // strictly smaller comp; the count rides the checkpoint job
+      val moved = Observation()
+      labels = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
+        .observe(moved, count(when(col("nbr_comp") < col("comp"), 1)).as("n"))
+        .select(col("id"), least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
         .localCheckpoint()
-      changed = next.filter(col("moved")).count()
-      labels = next.select("id", "comp")
+      changed = moved.get("n").asInstanceOf[Long]
       iter += 1
     }
     // Non-convergence means some chain's diameter exceeded maxIters (e.g.
@@ -406,8 +401,8 @@ object DedupQueries {
     * Components in MapReduce and Beyond", SoCC 2014) — the production
     * rung for pathological chain-shaped components where min-id flooding
     * ([[connectedComponents]]) needs O(diameter) rounds: star contraction
-    * converges in O(log n) rounds on ANY graph, with the same per-round
-    * plan shape (one groupBy-min + one equi-join, shuffled on node id).
+    * converges in O(log n) rounds on ANY graph. Each round
+    * ([[starRound]]) costs ONE Spark action, its localCheckpoint.
     *
     * Per round over the symmetric neighbor list:
     *   large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
@@ -416,10 +411,11 @@ object DedupQueries {
     *     for v ∈ Γ⁻(u) \ {m} and (u, m).
     * Both preserve connectivity and only ever lower a node's smallest
     * neighbor; the fixpoint is a set of stars whose centers are the
-    * component minima. Convergence is detected by the paper's monotone
-    * witness — Σ over nodes of their current smallest neighbor only
-    * decreases, so an unchanged (count, sum) pair is a fixpoint (no
-    * edge-set `except` join needed).
+    * component minima. Convergence is detected by an order-free
+    * (count, bit_xor(xxhash64(u, v))) witness of the round's edge set,
+    * observed inside the checkpoint job. The witness is not monotone and
+    * can collide, so an unchanged witness is CONFIRMED by one set-equality
+    * `except` against the previous edge set, paid on the final round only.
     *
     * Output contract is identical to [[connectedComponents]]:
     * (doc_id, comp_id) for every node incident to a pair, comp_id = min
@@ -436,35 +432,21 @@ object DedupQueries {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      // symmetric neighbor list for the large-star grouping
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // every large-star edge has u > v ⇒ small-star's m is plain min(Γ⁻)
-      val minsS = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(minsS, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(minsS.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint() // truncate lineage; blocks feed the witness agg too
       // type-agnostic witness: bit_xor of xxhash64 is order-free over any
       // id type (string image_ids as well as numeric doc_ids) and cannot
-      // overflow under ANSI the way sum(u + v) could
-      val w = small.agg(count(lit(1L)),
-        expr("bit_xor(xxhash64(u, v))")).collect()(0)
-      val cur = (w.getLong(0), if (w.isNullAt(1)) 0L else w.getLong(1))
-      // witness collision is theoretically possible (same count and sum,
-      // different edges), so an unchanged witness is CONFIRMED by one
-      // set-equality except — paid once, on the final round only
-      converged = cur == prev && small.except(edges).count() == 0
+      // overflow under ANSI the way sum(u + v) could. A witness a task
+      // retry double-counted costs at most an extra round: a false
+      // "unchanged" is still caught by the except below.
+      val witness = Observation()
+      val next = starRound(edges)
+        .observe(witness, count(lit(1L)).as("n"),
+          coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("x"))
+        .localCheckpoint()
+      val w = witness.get
+      val cur = (w("n").asInstanceOf[Long], w("x").asInstanceOf[Long])
+      converged = cur == prev && next.except(edges).count() == 0
       prev = cur
-      edges = small
+      edges = next
       iter += 1
     }
     if (strict)
@@ -478,6 +460,29 @@ object DedupQueries {
       .join(edges.select(col("u").as("id")).distinct(), Seq("id"), "left_anti")
     edges.select(col("u").as("doc_id"), col("v").as("comp_id"))
       .union(centers.select(col("id").as("doc_id"), col("id").as("comp_id")))
+  }
+
+  /** One large-star then small-star round over the edge set (u, v), u ≠ v
+    * (see [[connectedComponentsStar]]). Three exchanges and no join: the
+    * minima are `min(v) over (partition by u)` windows instead of a
+    * groupBy joined back, and the small-star input is hash-partitioned on
+    * u once, which serves both its (u, v) distinct and its u window.
+    */
+  private[graft] def starRound(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byU = Window.partitionBy("u")
+    val large = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+      .withColumn("m", least(col("u"), min("v").over(byU)))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    // every large-star edge has u > v ⇒ small-star's m is plain min(Γ⁻)
+    large.repartition(col("u")).distinct()
+      .withColumn("m", min("v").over(byU))
+      .select(inline(array(
+        struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u"), col("m").as("v")))))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 
   /** Largest prime below 2^32 — the MinHash modulus. */

@@ -291,16 +291,6 @@ object Drift {
     }
   }
 
-  /** Drift verdicts per partition: chi-square (bucketed counts vs baseline
-    * proportions) + KS (t-digest CDFs) — both statistics from ONE narrow
-    * pass that builds mergeable partials per input split, reduced per
-    * (part, colname) (a KB-scale shuffle), final math on the driver. At
-    * 10^12 rows the identical partials flow through the same
-    * groupByKey/reduceGroups; only the final few-hundred-row collect ever
-    * reaches the driver. With `baselineDir`, the reference histogram and
-    * digests come from the persisted snapshot; otherwise the merged global
-    * is the baseline. Returns (verdicts, violations).
-    */
   /** One narrow pass over `images` building mergeable per-(part, colname)
     * partials (t-digest + bucket histogram), reduced per key — a KB-scale
     * shuffle. Stays DISTRIBUTED (a Dataset): only callers that persist the
@@ -364,6 +354,16 @@ object Drift {
     */
   val DriverFinalizeMaxPartials = 100000
 
+  /** Drift verdicts per partition: chi-square (bucketed counts vs baseline
+    * proportions) + KS (t-digest CDFs) — both statistics from ONE narrow
+    * pass that builds mergeable partials per input split, reduced per
+    * (part, colname) (a KB-scale shuffle), final math on the driver up to
+    * `driverFinalizeMax` partials and in executors above it (see
+    * [[verdictsAuto]]). At 10^12 rows the identical partials flow through
+    * the same groupByKey/reduceGroups. With `baselineDir`, the reference histogram and
+    * digests come from the persisted snapshot; otherwise the merged global
+    * is the baseline. Returns (verdicts, violations).
+    */
   def check(images: DataFrame, runId: String,
             baselineDir: Option[String] = None,
             driverFinalizeMax: Int = DriverFinalizeMaxPartials): (DataFrame, DataFrame) =
